@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -484,9 +484,11 @@ object expressions {
   }
 }
 
-/** Session registration + Column-level API. Register once per session
-  * (idempotent); the Column wrappers resolve through the function registry
-  * so they need no private Column constructors. */
+/** Session registration + Column-level API. `register` is check-then-inject
+  * per session: a function already in the session's registry is left alone,
+  * so the many per-operator calls cost one lookup each and never replace (or
+  * log over) an earlier registration. The Column wrappers resolve through
+  * the function registry so they need no private Column constructors. */
 object GraftFunctions {
   import expressions._
 
@@ -513,9 +515,10 @@ object GraftFunctions {
   )
 
   def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     fns.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
     // install the optimizer rules for in-process sessions (idempotent);
     // spark-submit users get the same via spark.sql.extensions =

@@ -24,7 +24,11 @@ import graft.sources.{Footprints, Pages}
   *    and sort-merge join;
   *  - for the skew variant the hot cells are salted explicitly (AQE's skew
   *    handling can't split a single hot key within one join key — salting
-  *    can).
+  *    can), and each (cell, salt) partition of pages streams through a hash
+  *    table built from the replicated cover: the pages are never sorted;
+  *  - the page-side join keys (cell, salt) are non-nullable, so the
+  *    optimizer infers no `isnotnull(<key expression>)` filter below the
+  *    projection and each page evaluates its key once.
   */
 object GeoQueries {
 
@@ -48,9 +52,16 @@ object GeoQueries {
       .drop("wkt", "mcell")
   }
 
-  /** Page-side cell key: built-in arithmetic only (whole-stage codegen). */
+  /** Page-side join key that no cover cell has (cover cells are >= 0). */
+  private final val NoCell = -1L
+
+  /** Page-side cell join key: built-in arithmetic only (whole-stage
+    * codegen). A null coordinate maps to [[NoCell]], which never matches,
+    * so the key is non-nullable and the optimizer pushes no
+    * `isnotnull(<key expression>)` below the projection — that filter would
+    * evaluate the key (two double divides) a second time per page. */
   private def pageCell(level: Int): Column =
-    Pages.cellCol(col("ilat"), col("ilon"), level)
+    coalesce(Pages.cellCol(col("ilat"), col("ilon"), level), lit(NoCell))
 
   /** Widen footprint validity to forever (bench/synthetic variants). */
   private def timeless(fp: DataFrame): DataFrame =
@@ -137,7 +148,14 @@ object GeoQueries {
   /** D3 — salted skew join: the hot cell (10% of all pages, FIXTURES.md §3)
     * would make one shuffle partition ~400x the median. Pages get a salt
     * from the doc-id hash; the (tiny) footprint-cell side is replicated x S.
-    * Same result set as the unsalted join — the oracle checks that. */
+    * Same result set as the unsalted join — the oracle checks that.
+    *
+    * The join is a shuffled HASH join that builds the replicated cover:
+    * |cover| x S rows, at most 4^level x S at any scale, so the build table
+    * stays small while the pages (already partitioned by (cell, salt))
+    * stream through it. It replaced a sort-merge join, which sorted every
+    * page partition just to merge it against that same small cover. Like
+    * the cell key, the salt is non-nullable (sentinel -1, no cover salt). */
   def saltedPipJoin(spark: SparkSession, sfDir: String, salts: Int = 16,
       level: Int = JoinLevel): DataFrame =
     saltedPipJoinOn(spark, Pages.fromDocuments(spark, sfDir), salts, level)
@@ -148,10 +166,11 @@ object GeoQueries {
     GraftFunctions.register(spark)
     val pages = pagesIn
       .withColumn("cell", pageCell(level))
-      .withColumn("salt", pmod(xxhash64(col("doc_id")), lit(salts)).cast("int"))
+      .withColumn("salt",
+        coalesce(pmod(xxhash64(col("doc_id")), lit(salts)).cast("int"), lit(-1)))
     val fpCells0 = footprintCells(spark, level)
       .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
-    val fpCells = (if (widenTime) timeless(fpCells0) else fpCells0).hint("shuffle_merge")
+    val fpCells = (if (widenTime) timeless(fpCells0) else fpCells0).hint("shuffle_hash")
     pages.repartition(col("cell"), col("salt"))
       .join(fpCells, Seq("cell", "salt"))
       .filter(col("ilat").between(col("ilat0"), col("ilat1")) &&
@@ -385,7 +404,7 @@ object GeoQueries {
         "use GraphQueries.connectedComponents for deeper grids")
     val side = 1L << level
     val dense = Pages.fromDocuments(spark, sfDir)
-      .groupBy(pageCell(level).as("cell"))
+      .groupBy(Pages.cellCol(col("ilat"), col("ilon"), level).as("cell"))
       .agg(count(lit(1)).as("n_pages"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     (side, dense)

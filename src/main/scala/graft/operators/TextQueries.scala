@@ -89,15 +89,6 @@ object TextQueries {
         (count(lit(1)) - countDistinct(col("h"))).as("n_dups"))
       .orderBy(col("lang"))
 
-  /** 3-gram shingles of the token list (docs with >= 3 tokens). */
-  private def withShingles(d: DataFrame): DataFrame = {
-    val toks = split(col("text"), " ")
-    d.withColumn("n_tok", size(toks))
-      .filter(col("n_tok") >= 3)
-      .withColumn("sh", transform(sequence(lit(0), col("n_tok") - 3),
-        j => concat_ws(" ", slice(toks, j + 1, lit(3)))))
-  }
-
   /** Raw 60-bit shingle hashes per doc (`h0raw`, docs with >= 3 tokens):
     * ONE codegen'd kernel call per document (`shingle_hashes`) instead of
     * a per-shingle md5->hex->conv Column chain — identical values (the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -25,6 +25,12 @@ import graft.sources.Pages
   * form (tile, px, py, n) and compared against a pure-SQL DuckDB oracle —
   * i.e. the custom aggregation path itself is oracle-gated, not just a
   * SQL-shaped twin.
+  *
+  * Every long-form output is bounded by construction: at most one row per
+  * pixel of every tile, 4^TileLevel * W * H = 65,536 rows at any corpus
+  * size. So the aggregates run parallel and only their small output is
+  * sorted, on ONE partition (`sortedBounded`) — a global `orderBy` would
+  * add a range exchange plus a sampling job to find its bounds.
   */
 object Tiling {
 
@@ -105,22 +111,14 @@ object Tiling {
     // ceil-div boundaries, same formula as CellIndex.boundary; when the
     // grid divides evenly the stride is a plan-time CONSTANT (divisions by
     // constants codegen far cheaper than by a per-row column)
-    def lo(c: org.apache.spark.sql.Column, dim: Int) =
-      floor((c * dim + (p - 1)) / p).cast("long")
-    val base = pages.withColumn("tile", cy * p + cx)
-    val withPx =
-      if (gw % p == 0)
-        base.withColumn("px", floor((gx - cx * (gw / p)) * W / (gw / p)).cast("int"))
-      else base.withColumn("xlo", lo(cx, gw)).withColumn("xhi", lo(cx + 1, gw))
-        .withColumn("px", floor((gx - col("xlo")) * W / (col("xhi") - col("xlo"))).cast("int"))
-        .drop("xlo", "xhi")
-    val withPy =
-      if (gh % p == 0)
-        withPx.withColumn("py", floor((gy - cy * (gh / p)) * H / (gh / p)).cast("int"))
-      else withPx.withColumn("ylo", lo(cy, gh)).withColumn("yhi", lo(cy + 1, gh))
-        .withColumn("py", floor((gy - col("ylo")) * H / (col("yhi") - col("ylo"))).cast("int"))
-        .drop("ylo", "yhi")
-    withPy.withColumn("pxy", (col("py") * W + col("px")).cast("long"))
+    def lo(c: Column, dim: Int) = floor((c * dim + (p - 1)) / p).cast("long")
+    def pixel(g: Column, c: Column, dim: Int, n: Int): Column =
+      if (dim % p == 0) floor((g - c * (dim / p)) * n / (dim / p)).cast("int")
+      else floor((g - lo(c, dim)) * n / (lo(c + 1, dim) - lo(c, dim))).cast("int")
+    val px = pixel(gx, cx, gw, W)
+    val py = pixel(gy, cy, gh, H)
+    pages.select(col("*"), (cy * p + cx).as("tile"), px.as("px"), py.as("py"),
+      (py * W + px).cast("long").as("pxy"))
   }
 
   /** Sparse per-pixel counts: the codegen'd hot path. The grouping key is
@@ -130,7 +128,7 @@ object Tiling {
     * map size, not CPU, limits scaling on this leg). */
   def sparseCounts(spark: SparkSession, pages: DataFrame): DataFrame =
     pixelizedOn(spark, pages)
-      .withColumn("k", col("tile") * (W * H) + col("pxy"))
+      .select((col("tile") * (W * H) + col("pxy")).as("k"))
       .groupBy(col("k"))
       .agg(count(lit(1)).as("n"))
       .select((col("k") / (W * H)).cast("long").as("tile"),
@@ -141,10 +139,18 @@ object Tiling {
     rasterizeLongOn(spark, Pages.fromDocuments(spark, sfDir))
 
   def rasterizeLongOn(spark: SparkSession, pages: DataFrame): DataFrame =
+    sortedBounded(rasterLong(spark, pages), "tile", "py", "px")
+
+  private def rasterLong(spark: SparkSession, pages: DataFrame): DataFrame =
     sparseCounts(spark, pages)
       .select(col("tile"), (col("pxy") % W).cast("int").as("px"),
         (col("pxy") / W).cast("int").as("py"), col("n"))
-      .orderBy(col("tile"), col("py"), col("px"))
+
+  /** Total order for a long-form output (<= 4^TileLevel * W * H rows by
+    * construction): one exchange to a single partition and a local sort.
+    * The aggregates below it keep their parallelism. */
+  private def sortedBounded(df: DataFrame, keys: String*): DataFrame =
+    df.repartition(1).sortWithinPartitions(keys.map(col): _*)
 
   /** Dense grids per tile (the raster artifact consumed by mosaicking and
     * export), densified from the sparse counts via RasterAgg. */
@@ -162,7 +168,7 @@ object Tiling {
     val mosaic = udaf(new MosaicAgg, Encoders.product[TileGrid])
     val pix = pixelized(spark, sfDir)
       .withColumn("snap", (col("doc_id") % 2).cast("int"))
-    pix
+    val mosaicked = pix
       // codegen'd hash agg per pixel first; ts rides along as max
       .groupBy(col("tile"), col("snap"), col("pxy"))
       .agg(count(lit(1)).as("n"), max(col("ts_sec")).as("pts"))
@@ -175,7 +181,7 @@ object Tiling {
       .filter(col("col") > 0)
       .select(col("tile"), (col("pos") % W).cast("int").as("px"),
         (col("pos") / W).cast("int").as("py"), col("col").as("n"))
-      .orderBy(col("tile"), col("py"), col("px"))
+    sortedBounded(mosaicked, "tile", "py", "px")
   }
 
   /** Band math (the gips products analog — NDVI-style per-pixel arithmetic
@@ -184,14 +190,14 @@ object Tiling {
     * aggregation pass builds both bands (no self-join of two rasters), so
     * the shuffle carries one row per non-empty pixel. */
   def bandMathLong(spark: SparkSession, sfDir: String): DataFrame =
-    pixelized(spark, sfDir)
+    sortedBounded(pixelized(spark, sfDir)
       .groupBy(col("tile"), col("pxy"))
       .agg(count(lit(1)).as("n_all"),
         sum(when(col("lang") === "en", 1L).otherwise(0L)).as("n_en"))
       .withColumn("ratio_m", floor(col("n_en") * 1000 / col("n_all")).cast("long"))
       .select(col("tile"), (col("pxy") % W).cast("int").as("px"),
-        (col("pxy") / W).cast("int").as("py"), col("n_all"), col("n_en"), col("ratio_m"))
-      .orderBy(col("tile"), col("py"), col("px"))
+        (col("pxy") / W).cast("int").as("py"), col("n_all"), col("n_en"), col("ratio_m")),
+      "tile", "py", "px")
 
   /** Pyramid / overview build (gips tile-pyramid analog): the level-4
     * raster downsampled one level — 2x2 child tiles collapse into one
@@ -208,25 +214,25 @@ object Tiling {
     val cy = floor(col("tile") / p).cast("long")
     val px = (col("pxy") % W).cast("int")
     val py = (col("pxy") / W).cast("int")
-    sparseCounts(spark, pages)
+    sortedBounded(sparseCounts(spark, pages)
       .select(
         (floor(cy / 2).cast("long") * (p / 2) + floor(cx / 2).cast("long")).as("ptile"),
         floor(((cx % 2).cast("int") * W + px) / 2).cast("int").as("px"),
         floor(((cy % 2).cast("int") * H + py) / 2).cast("int").as("py"),
         col("n"))
       .groupBy(col("ptile"), col("px"), col("py"))
-      .agg(sum(col("n")).as("n"))
-      .orderBy(col("ptile"), col("py"), col("px"))
+      .agg(sum(col("n")).as("n")),
+      "ptile", "py", "px")
   }
 
   /** Zonal stats over rasters (gips_stats analog): per tile, pixel-count
     * distribution summary — exercises the raster -> stats path. */
   def tileStats(spark: SparkSession, sfDir: String): DataFrame =
-    rasterizeLong(spark, sfDir)
+    sortedBounded(rasterLong(spark, Pages.fromDocuments(spark, sfDir))
       .groupBy(col("tile"))
       .agg(count(lit(1)).as("n_pixels"), sum(col("n")).as("n_pages"),
-        max(col("n")).as("max_pixel"), min(col("n")).as("min_pixel"))
-      .orderBy(col("tile"))
+        max(col("n")).as("max_pixel"), min(col("n")).as("min_pixel")),
+      "tile")
 
   // ---- oracle twins -------------------------------------------------------
   // Boundary arithmetic at level 4 over the row-major surrogate:

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Expression, Floor, IsNotNull, XxHash64}
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import graft.operators.{GeoQueries, SimilarityQueries, Tiling}
 import graft.sources.Pages
@@ -9,7 +14,7 @@ import graft.testutil.SparkTestBase
   * survive a 100x scale-up are asserted here, not just benchmarked —
   * a regression that re-introduces a pages-side shuffle or kills
   * whole-stage codegen on a hot path fails CI, not the next bench. */
-class PlanShapeSpec extends SparkTestBase {
+class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def executed(df: org.apache.spark.sql.DataFrame): String = {
     df.collect() // force AQE to finalize
@@ -45,6 +50,53 @@ class PlanShapeSpec extends SparkTestBase {
     val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(shuffles === 1, s"expected exactly one shuffle:\n${plan.take(2000)}")
     assert("HashAggregate".r.findAllIn(plan).length >= 2, "no map-side partial agg")
+  }
+
+  private def synthPages(n: Long, parts: Int) =
+    Pages.synthetic(spark, n, parts).select("doc_id", "ts_sec", "ilat", "ilon", "lang")
+
+  test("salted join (q04 path): shuffled hash join builds the cover, pages never sorted") {
+    val df = GeoQueries.saltedPipJoinOn(spark, synthPages(20000, 4), widenTime = true)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val joins = collect(plan) { case j: ShuffledHashJoinExec => j }
+    assert(joins.size === 1, plan.toString.take(2500))
+    assert(joins.head.buildSide === BuildRight, plan.toString.take(2500))
+    assert(joins.head.right.output.exists(_.name == "fp_id"), "build side is not the cover")
+    assert(collect(plan) { case s: SortExec => s }.isEmpty, plan.toString.take(2500))
+    assert(collect(plan) { case j: SortMergeJoinExec => j }.isEmpty, plan.toString.take(2500))
+  }
+
+  test("page-side join keys are non-nullable: no isnotnull over the cell or salt expression") {
+    // the page keys are the only floor (cell) and xxhash64 (salt)
+    // expressions in these plans; a pushed-down isnotnull over either one
+    // evaluates that key a second time per page
+    def isKey(e: Expression) =
+      e.exists(x => x.isInstanceOf[Floor] || x.isInstanceOf[XxHash64])
+    for (df <- Seq(
+        GeoQueries.pipJoinTimelessOn(spark, synthPages(1000, 2)),
+        GeoQueries.saltedPipJoinOn(spark, synthPages(1000, 2), widenTime = true))) {
+      val plan = df.queryExecution.optimizedPlan
+      val keyChecks = plan.flatMap(_.expressions.flatMap(_.collect {
+        case n: IsNotNull if isKey(n.child) => n
+      }))
+      assert(keyChecks.isEmpty, s"$keyChecks\n$plan")
+    }
+  }
+
+  test("long-form raster: no range exchange; rows come out sorted by (tile, py, px)") {
+    def rows(parts: Int) = {
+      val df = Tiling.rasterizeLongOn(spark, synthPages(20000, parts))
+      val got = df.collect().toSeq
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("rangepartitioning"), plan.take(2500))
+      got
+    }
+    val Seq(one, seven) = Seq(1, 7).map(rows)
+    assert(one.nonEmpty)
+    for (got <- Seq(one, seven))
+      assert(got === got.sortBy(r => (r.getLong(0), r.getInt(2), r.getInt(1))))
+    assert(one === seven)
   }
 
   test("parquet scan prunes columns: inventory never reads html/text") {
